@@ -17,11 +17,26 @@ Scale defaults (100 TB design notes, SURVEY.md §4):
   to AQE's coalescing with a high initial value.
 - ``maxPartitionBytes`` left at 128 MB: right for both local parquet and
   cluster HDFS/S3 scans.
+
+Importing this module also installs a backport of CPython gh-103200 into
+the process. A pyspark Python worker calls ``importlib.invalidate_caches()``
+at the start of every task (``worker_util.setup_spark_files``). Before
+Python 3.12, ``zipimporter.invalidate_caches`` re-reads the archive's whole
+central directory there, for every zip importer on ``sys.path``:
+pyspark.zip and its subpackages, the Spark jar, the shipped package zip.
+That is about 230 ms per task. The backport re-reads an archive only when
+its ``(st_ino, st_size, st_mtime_ns)`` changed since that importer last
+read it, so a rewritten or new archive (``addPyFile``) is still picked up.
+Every worker that runs an engine function imports the package, and so this
+module, when it unpickles that function. On Python 3.12+ the backport is a
+no-op, as is a second install.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -84,3 +99,30 @@ def ensure_events_read_confs(spark: SparkSession) -> None:
     """
     ensure_nanos_as_long(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _install_stat_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip unchanged archives
+    (Python < 3.12 only; see the module docstring)."""
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 12) or hasattr(cls.invalidate_caches, "reread"):
+        return
+    reread = cls.invalidate_caches
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            sig = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            sig = None  # gone or unreadable: let the re-read decide
+        if sig is not None and sig == getattr(self, "_read_sig", None):
+            return
+        # stat before reading: a rewrite racing the read is seen next time
+        reread(self)
+        self._read_sig = sig
+
+    invalidate_caches.reread = reread
+    cls.invalidate_caches = invalidate_caches
+
+
+_install_stat_checked_zip_invalidation()

@@ -19,7 +19,9 @@ and dialect themselves:
 - ``PgWireStubServer`` is a threaded in-process server speaking enough
   of the v3 protocol for that exchange (startup/SSLRequest, BEGIN/
   COMMIT, CREATE TABLE, COPY ... FROM STDIN) and records rows per
-  table so tests can assert the exact landed relation.
+  table so tests can assert the exact landed relation. It sets
+  ``TCP_NODELAY`` on each connection, as a real backend does, so its
+  multi-message replies are not held back by Nagle's algorithm.
 - ``gp_create_table_ddl`` renders the Greenplum DDL dialect from a
   Spark schema: type mapping plus the GP-specific ``DISTRIBUTED BY``
   clause (the distribution key IS the Greenplum data model; a load
@@ -32,6 +34,7 @@ spec, not from any driver source).
 
 from __future__ import annotations
 
+import itertools
 import socket
 import struct
 import threading
@@ -57,6 +60,8 @@ _COPY_ESCAPES = {
     "\t": "\\t",
     "\v": "\\v",
 }
+_COPY_TRANSLATE = str.maketrans(_COPY_ESCAPES)
+_COPY_UNESCAPES = {v[1]: k for k, v in _COPY_ESCAPES.items()}
 
 
 def copy_encode_value(v) -> str:
@@ -68,11 +73,7 @@ def copy_encode_value(v) -> str:
         return "t" if v else "f"
     if isinstance(v, bytes):
         return "\\\\x" + v.hex()
-    s = str(v)
-    out = []
-    for ch in s:
-        out.append(_COPY_ESCAPES.get(ch, ch))
-    return "".join(out)
+    return str(v).translate(_COPY_TRANSLATE)
 
 
 def copy_decode_value(s: str):
@@ -81,12 +82,13 @@ def copy_decode_value(s: str):
     rows, exactly like the driver's hash protocol)."""
     if s == "\\N":
         return None
+    if "\\" not in s:
+        return s
     out = []
     i = 0
-    rev = {v[1]: k for k, v in _COPY_ESCAPES.items()}
     while i < len(s):
         if s[i] == "\\" and i + 1 < len(s):
-            out.append(rev.get(s[i + 1], s[i + 1]))
+            out.append(_COPY_UNESCAPES.get(s[i + 1], s[i + 1]))
             i += 2
         else:
             out.append(s[i])
@@ -159,13 +161,13 @@ def gp_create_table_ddl(
 
 
 def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
+    buf = bytearray()
     while len(buf) < n:
         chunk = sock.recv(n - len(buf))
         if not chunk:
             raise ConnectionError("server closed mid-message")
         buf += chunk
-    return buf
+    return bytes(buf)
 
 
 def _read_msg(sock: socket.socket) -> tuple[bytes, bytes]:
@@ -258,13 +260,14 @@ class PgCopyConfig:
 
 
 def _copy_partition(host, port, table, cols, user, database, rows) -> None:
-    rows = list(rows)
-    if not rows:
+    rows = iter(rows)
+    first = next(rows, None)
+    if first is None:
         return  # no empty connections: mirrors JDBC's skip of empty tasks
     c = PgWireClient(host, port, user=user, database=database)
     try:
         c.query("BEGIN")
-        c.copy_rows(table, cols, rows)
+        c.copy_rows(table, cols, itertools.chain((first,), rows))
         c.query("COMMIT")
     finally:
         c.close()
@@ -341,6 +344,10 @@ class PgWireStubServer:
 
     def _serve_conn(self, conn: socket.socket) -> None:
         try:
+            # A reply is several small writes (C then Z, R/S/K/Z at
+            # startup); Nagle would hold each follow-up back until the
+            # client's delayed ACK, ~40 ms per statement.
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             # startup phase: length-prefixed, untagged
             (length,) = struct.unpack("!i", _recv_exact(conn, 4))
             body = _recv_exact(conn, length - 4)
@@ -398,9 +405,12 @@ class PgWireStubServer:
                 elif tag == b"f":  # CopyFail
                     _send_msg(conn, b"Z", b"I")
                     return
+            # a row ends at "\n" only: str.splitlines would also split
+            # inside values at U+2028, U+0085 or \x1c-\x1e, which COPY
+            # text format does not escape
             rows = [
                 tuple(copy_decode_value(v) for v in line.split("\t"))
-                for line in data.decode().splitlines()
+                for line in data.decode().split("\n")
                 if line
             ]
             with self._lock:

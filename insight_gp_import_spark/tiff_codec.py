@@ -166,6 +166,12 @@ def lzw_encode(buf: bytes) -> bytes:
             omega = b""
     if omega:
         emit(table[omega], width)
+        # The decoder adds a table entry for this last code too (unless
+        # it is the first code after a Clear), and may bump its width
+        # before reading EOI; libtiff's LZWPostEncode pairs it the same
+        # way.
+        if nxt > 258 and nxt + 1 == (1 << width) and width < 12:
+            width += 1
     emit(_EOI, width)
     if nbits:
         out.append((acc << (8 - nbits)) & 0xFF)

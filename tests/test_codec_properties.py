@@ -15,7 +15,7 @@ Invariants:
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from insight_gp_import_spark.bmp_codec import decode_bmp, encode_bmp
@@ -126,6 +126,7 @@ def test_tiff_roundtrip_lossless(dims, seed, comp, pred, rps):
 
 @given(seed=seeds, n=st.integers(0, 30000),
        alphabet=st.integers(2, 256))
+@example(seed=9802, n=9802, alphabet=40)  # last code bumps the width before EOI
 @SETTINGS
 def test_tiff_lzw_stream_roundtrip(seed, n, alphabet):
     """Raw LZW stream invariant across code-width transitions (511/

@@ -224,7 +224,7 @@ def test_pgwire_copy_round_trip_parallel(spark):
 
 def test_pgwire_copy_null_and_escapes(spark):
     """COPY text framing survives the values that break naive loaders:
-    NULLs, tabs, newlines, backslashes."""
+    NULLs, tabs, newlines, backslashes, Unicode line separators."""
     from insight_gp_import_spark.sources import (
         PgCopyConfig,
         PgWireStubServer,
@@ -233,7 +233,8 @@ def test_pgwire_copy_null_and_escapes(spark):
 
     df = spark.createDataFrame(
         [(1, "plain"), (2, None), (3, "tab\there"), (4, "nl\nhere"),
-         (5, "back\\slash"), (6, "\\N literal")],
+         (5, "back\\slash"), (6, "\\N literal"),
+         (7, "ls\u2028nel\x85fs\x1cend")],
         "id int, payload string",
     )
     with PgWireStubServer() as srv:
@@ -246,6 +247,7 @@ def test_pgwire_copy_null_and_escapes(spark):
     assert got["4"] == "nl\nhere"
     assert got["5"] == "back\\slash"
     assert got["6"] == "\\N literal"
+    assert got["7"] == "ls\u2028nel\x85fs\x1cend"  # not split as lines
 
 
 def test_gp_create_table_ddl(spark):
@@ -286,3 +288,33 @@ def test_pgwire_stub_accepts_ddl_and_records_statements():
         c.close()
         assert "t__stage" in srv.tables
         assert stmt in srv.statements
+
+
+def test_pgwire_copy_partition_streams_and_skips_empty():
+    """A writer task opens no connection for an empty partition, and
+    streams a non-empty one: rows are pulled from the partition iterator
+    while the COPY is open, so an upstream failure mid-stream (after
+    64 KiB frames were already sent) lands nothing."""
+    import pytest
+
+    from insight_gp_import_spark.sources import PgWireStubServer
+    from insight_gp_import_spark.sources.pgwire import _copy_partition
+
+    def failing_rows():
+        for i in range(5000):
+            yield (i, "x" * 40)
+        raise RuntimeError("upstream task failed")
+
+    with PgWireStubServer() as srv:
+        _copy_partition(srv.host, srv.port, "t", ["id", "s"], "u", "db", iter(()))
+        assert srv.connections == 0
+        _copy_partition(srv.host, srv.port, "t", ["id", "s"], "u", "db",
+                        iter([(1, "a"), (2, None)]))
+        assert srv.connections == 1
+        assert srv.tables["t"] == [("1", "a"), ("2", None)]
+        with pytest.raises(RuntimeError, match="upstream task failed"):
+            _copy_partition(srv.host, srv.port, "t", ["id", "s"], "u", "db",
+                            failing_rows())
+        assert srv.connections == 2
+        assert len(srv.tables["t"]) == 2
+        assert sum(s.startswith("COMMIT") for s in srv.statements) == 1
